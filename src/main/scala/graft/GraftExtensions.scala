@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{
   Divide, Expression, ExpressionInfo, GreaterThan, If, Literal, Multiply, Sqrt}
 
-import graft.functions.{CharEntropyExpr, GenOverlapExpr, H32Expr, HashedGramSetExpr, MinHashSigExpr, SimHashExpr, VecDotExpr, VecL1Expr, VecL2SqExpr, WordShinglesExpr}
+import graft.functions.{CharEntropyExpr, GenOverlapExpr, H32Expr, HashedGramSetExpr, MinHashSigExpr, ParamExpr, SimHashExpr, VecDotExpr, VecL1Expr, VecL2SqExpr, WordShinglesExpr}
 
 /** Registers the native scoring/fingerprint kernels as SQL FUNCTIONS, so
   * the engine's hot expressions are usable from pure `spark.sql(...)` —
@@ -40,9 +40,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
+  /** Inverse L2 norm of `v`. A constant argument (a literal query vector)
+    * is evaluated here and bound as a [[ParamExpr]]: left to constant
+    * folding, its double would be inlined into the generated code and
+    * every new query would compile a new class. */
   private def invNormOf(v: Expression): Expression = {
     val n = VecDotExpr(v, v)
-    If(GreaterThan(n, Literal(0.0)), Divide(Literal(1.0), Sqrt(n)), Literal(0.0))
+    val inv = If(GreaterThan(n, Literal(0.0)), Divide(Literal(1.0), Sqrt(n)), Literal(0.0))
+    if (v.foldable && v.resolved) ParamExpr(inv.eval().asInstanceOf[Double]) else inv
   }
 
   private def intLit(e: Expression, fn: String, arg: String): Int = e match {

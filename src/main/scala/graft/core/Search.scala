@@ -134,12 +134,15 @@ final case class SearchPlan(
   def withScoreRounding(d: Int): SearchPlan =
     copy(roundScoreDecimals = Some(d))
 
-  private def cmpExpr(c: Column, t: Double, cmp: Cmp): Column = cmp match {
-    case Cmp.Lt  => c < t
-    case Cmp.Lte => c <= t
-    case Cmp.Gt  => c > t
-    case Cmp.Gte => c >= t
-    case Cmp.Eq  => c === t
+  private def cmpExpr(c: Column, t: Double, cmp: Cmp): Column = {
+    val p = vectors.param(t)
+    cmp match {
+      case Cmp.Lt  => c < p
+      case Cmp.Lte => c <= p
+      case Cmp.Gt  => c > p
+      case Cmp.Gte => c >= p
+      case Cmp.Eq  => c === p
+    }
   }
 
   /** Assemble the DataFrame. Result shape mirrors the reference
@@ -153,6 +156,11 @@ final case class SearchPlan(
     * filter; the query batch is the ONLY broadcast (a handful of rows);
     * there is no other shuffle — top-k is TakeOrderedAndProject
     * (per-partition bounded heap, then a single driver merge of k·P rows).
+    * Per-query doubles (query inverse norm, `vecFilter` threshold) are
+    * bound with [[vectors.param]], so the generated code is the same for
+    * every query of one shape and one compiled, JIT-warm scoring loop
+    * serves them all; the metadata predicate keeps plain literals, which
+    * Parquet pushdown and row-group pruning need.
     */
   def collect(): DataFrame = {
     require(queries.nonEmpty, "query batch must not be empty")
@@ -190,7 +198,7 @@ final case class SearchPlan(
         val q = queries.head
         filtered.withColumn("score",
           dimGuard(vectors.score(metric, v, vectors.vecLit(q), storeInv,
-            Some(lit(vectors.invNormOf(q))))))
+            Some(vectors.param(vectors.invNormOf(q))))))
       } else {
         // Batch: broadcast the tiny query table, score every (row, query)
         // pair, then ONE global top-k across all pairs (ref semantics:

@@ -4,11 +4,11 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.bridge.{toColumn => column, toExpression => expression}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused native kernels for the text-dedup hot path.
@@ -1108,6 +1108,31 @@ case class VecHammingExpr(left: Expression, right: Expression) extends VecBinary
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecHammingExpr =
     copy(left = newLeft, right = newRight)
+}
+
+/** A per-query double (query inverse norm, score threshold) bound as a
+  * PARAMETER of the generated code rather than spliced into it. Spark
+  * inlines a double `Literal` as `0.123D` in the Java source, so every
+  * new value compiles a new class and scores its first rows in a cold,
+  * un-JITted loop. Here the value travels in the `references` array —
+  * the way Spark already holds array literals such as the query vector —
+  * and the source text is the same for every value: all queries of one
+  * shape share one compiled, JIT-warm scoring loop. Non-foldable, so the
+  * optimizer never turns it back into a literal; `eval` returns the same
+  * double, so codegen-on and codegen-off scores are bit-identical. Not
+  * for predicates that must reach the Parquet scan: pushdown needs
+  * literals. */
+case class ParamExpr(value: Double) extends LeafExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def prettyName: String = "param"
+  override def sql: String = s"param(${Literal(value).sql})"
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("param", java.lang.Double.valueOf(value), "java.lang.Double")
+    val v = ctx.addMutableState("double", "param", v => s"$v = $ref.doubleValue();")
+    ExprCode.forNonNullValue(JavaCode.global(v, DoubleType))
+  }
 }
 
 case class WordShinglesExpr(child: Expression, n: Int)

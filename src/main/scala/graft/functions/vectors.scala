@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge.{toColumn => column}
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.core.Metric
@@ -30,6 +31,12 @@ object vectors {
 
   /** Literal query vector as an array<double> Column. */
   def vecLit(q: Seq[Double]): Column = array(q.map(lit): _*)
+
+  /** A per-query double (query inverse norm, score threshold) as a bound
+    * codegen parameter, never an inlined constant: `lit(x)` would put the
+    * value into the generated Java source and compile a new class for
+    * every query. See [[ParamExpr]]. */
+  def param(x: Double): Column = column(ParamExpr(x))
 
   /** Dot product — sequential fold in double, as one native compiled
     * loop (HOFs evaluate interpreted; this is the hot scoring kernel, the

@@ -114,8 +114,8 @@ object VecIndex {
         * `inv_norm`, never recomputed per scan. */
       rpDims: Option[Int] = None)
 
-  /** Apply the bloom-filter writer options of `opts` (shared by [[build]]
-    * and [[append]]): per-column enable/ndv/fpp, plus the global size
+  /** Apply the bloom-filter writer options of `opts` (shared by [[build]],
+    * [[append]] and [[compact]]): per-column enable/ndv/fpp, plus the global size
     * ceiling — parquet-mr keys `max.bytes` off the writer, not the
     * column, so `bloomMaxBytes` clamps every bloom column at once. */
   private def withBloomOptions(
@@ -370,10 +370,15 @@ object VecIndex {
     * files → file-open overhead and loose zonemaps). Partitioned layouts
     * rewrite one file per partition directory; flat layouts re-sort by
     * `opts.sortBy` (restoring zonemap locality) or coalesce to
-    * `opts.numFiles`. Staged write-then-swap: the new dataset lands in a
-    * temp sibling and replaces the index with two filesystem renames, so
-    * readers never observe a half-compacted directory. Index metadata is
-    * carried over verbatim. */
+    * `opts.numFiles`; the bloom options of `opts` apply to the rewritten
+    * files as at [[build]]. Staged write-then-swap: the new dataset lands
+    * in a temp sibling; the live index is renamed aside, the new one
+    * renamed in, and only then is the old copy deleted. If either rename
+    * fails the call throws, and the index is left at `path` (first
+    * rename) or at the `.compact-old` sibling (second rename) — never
+    * deleted. Between the two renames `path` is briefly absent, so
+    * concurrent readers can fail rather than see a half-written index.
+    * Index metadata is carried over verbatim. */
   def compact(
       spark: SparkSession,
       path: String,
@@ -396,8 +401,8 @@ object VecIndex {
       case None => df.coalesce(parts)
     }
     val tmp = path + ".compact-tmp"
-    var writer = laidOut.write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", opts.rowGroupBytes.toString)
+    var writer = withBloomOptions(laidOut.write.mode(SaveMode.Overwrite)
+      .option("parquet.block.size", opts.rowGroupBytes.toString), opts)
     partCol.foreach(c => writer = writer.partitionBy(c))
     writer.parquet(tmp)
     meta match {
@@ -410,9 +415,20 @@ object VecIndex {
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(path)
     val tmpP = new org.apache.hadoop.fs.Path(tmp)
+    val oldP = new org.apache.hadoop.fs.Path(path + ".compact-old")
     val fs = root.getFileSystem(conf)
-    fs.delete(root, true)
-    fs.rename(tmpP, root)
+    // `path` was just read, so it is the live index: an `.compact-old`
+    // left beside it by an interrupted earlier compact is a stale copy.
+    fs.delete(oldP, true)
+    if (!fs.rename(root, oldP))
+      throw new java.io.IOException(
+        s"graft: compact could not move the live index $path aside to $oldP; " +
+          s"the index is unchanged and the compacted copy is at $tmp")
+    if (!fs.rename(tmpP, root))
+      throw new java.io.IOException(
+        s"graft: compact could not move the compacted index $tmp to $path; " +
+          s"the previous index is preserved at $oldP")
+    fs.delete(oldP, true)
 
     val reopened = spark.read.parquet(path)
     val n = reopened.count()

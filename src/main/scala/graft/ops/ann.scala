@@ -291,7 +291,7 @@ object ann {
     val pq = vectors.projectOf(q, mat)
     val rpScore = vectors.quantize(
       vectors.score(Metric.Cosine, col(rpCol), vectors.vecLit(pq),
-        queryInvNorm = Some(lit(vectors.invNormOf(pq)))), 4)
+        queryInvNorm = Some(vectors.param(vectors.invNormOf(pq)))), 4)
     val pool = store.df
       .withColumn("_rp_score", rpScore)
       .orderBy(col("_rp_score").desc, col(store.idCol).asc)
@@ -333,7 +333,7 @@ object ann {
     val prefix = slice(vectors.asDoubleArray(col(store.vecCol)), 1, prefixDims)
     val coarse = vectors.quantize(
       vectors.score(Metric.Cosine, prefix, vectors.vecLit(qp),
-        queryInvNorm = Some(lit(vectors.invNormOf(qp)))), 4)
+        queryInvNorm = Some(vectors.param(vectors.invNormOf(qp)))), 4)
     val pool = store.df
       .withColumn("_mrl_score", coarse)
       .orderBy(col("_mrl_score").desc, col(store.idCol).asc)

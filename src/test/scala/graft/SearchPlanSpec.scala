@@ -169,4 +169,70 @@ class SearchPlanSpec extends SparkSpec {
       .query(Seq.empty[Double], Metric.Jaccard).collect())
     assert(empty == Seq(9L -> 0.0))
   }
+
+  // A Parquet-backed index: the optimizer folds projections over a local
+  // relation before execution, so those never reach whole-stage codegen.
+  private lazy val indexed: VecStore = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-search-").toString
+    val df = spark.range(512).select(col("id").as("vec_id"),
+      array((0 until 8).map(d => sin(col("id") * (d + 1) + d)): _*).as("embedding"))
+    graft.index.VecIndex.build(df, s"$dir/idx")._1
+  }
+
+  private val qa = (0 until 8).map(d => math.cos(d + 0.5))
+  private val qb = (0 until 8).map(d => math.sin(3.0 * d - 1.0))
+
+  /** The whole-stage generated sources of a DataFrame, after running it. */
+  private def stageCode(df: DataFrame): Seq[String] = {
+    df.collect()
+    val code = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(df.queryExecution.executedPlan).map(_._2)
+    assert(code.nonEmpty, "plan has no whole-stage codegen")
+    code
+  }
+
+  private def sameCode(a: DataFrame, b: DataFrame): Boolean = stageCode(a) == stageCode(b)
+
+  private def cosineSql(q: Seq[Double]): DataFrame = {
+    GraftExtensions.register(spark)
+    indexed.df.createOrReplaceTempView("graft_param_idx")
+    spark.sql(
+      s"""SELECT vec_id, graft_cosine(embedding, array(${q.map(x => s"${x}D").mkString(", ")}))
+         |  AS score FROM graft_param_idx ORDER BY score DESC, vec_id LIMIT 10""".stripMargin)
+  }
+
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("per-query scalars are codegen parameters: one shape, one generated class") {
+    for (m <- Seq(Metric.Cosine, Metric.DotProduct, Metric.Euclidean))
+      assert(sameCode(indexed.query(qa, m).take(10).collect(),
+        indexed.query(qb, m).take(10).collect()),
+        s"$m: a new query vector changed the generated code")
+    assert(sameCode(indexed.query(qa, Metric.DotProduct).vecFilter(0.1, Cmp.Gt).collect(),
+      indexed.query(qb, Metric.DotProduct).vecFilter(-0.2, Cmp.Gt).collect()),
+      "a new vecFilter threshold changed the generated code")
+    assert(sameCode(cosineSql(qa), cosineSql(qb)),
+      "a new graft_cosine literal query changed the generated code")
+  }
+
+  test("bound parameters score bit-identically with codegen on and off") {
+    def run(): Seq[Seq[(Long, Long)]] = {
+      val plans = Seq(
+        indexed.query(qa, Metric.Cosine).take(20).collect(),
+        indexed.query(qb, Metric.DotProduct).take(20).collect(),
+        indexed.query(qa, Metric.Euclidean).take(20).collect(),
+        indexed.query(qb, Metric.Cosine).vecFilter(0.1, Cmp.Gt).collect(),
+        cosineSql(qa))
+      plans.map(df => idScores(df).map { case (i, sc) =>
+        (i, java.lang.Double.doubleToRawLongBits(sc)) })
+    }
+    val on = run()
+    val off = withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run())
+    assert(on.forall(_.nonEmpty))
+    assert(on == off)
+  }
 }

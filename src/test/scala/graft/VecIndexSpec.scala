@@ -99,23 +99,33 @@ class VecIndexSpec extends SparkSpec {
       col("id").as("vec_id"),
       concat(lit("name_"), col("id")).as("name"),
       array(Seq(sin(col("id").cast("double")), cos(col("id").cast("double"))): _*).as("embedding"))
-    VecIndex.build(df, s"$tmp/bloom_idx",
-      opts = VecIndex.BuildOptions(bloomCols = Seq("name"), bloomNdv = 2000,
-        bloomFpp = Some(0.005), numFiles = Some(1)))
-    import scala.jdk.CollectionConverters._
-    val part = new java.io.File(s"$tmp/bloom_idx").listFiles()
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).head
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(part.getAbsolutePath),
-      spark.sessionState.newHadoopConf())
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val block = reader.getFooter.getBlocks.asScala.head
-      val nameCol = block.getColumns.asScala.find(_.getPath.toDotString == "name").get
-      assert(nameCol.getBloomFilterOffset >= 0, "no bloom filter written for 'name'")
-      val bloom = reader.getBloomFilterDataReader(block).readBloomFilter(nameCol)
-      assert(bloom != null && bloom.getBitsetSize > 0)
-    } finally reader.close()
+    val opts = VecIndex.BuildOptions(bloomCols = Seq("name"), bloomNdv = 2000,
+      bloomFpp = Some(0.005), numFiles = Some(1))
+    val dir = s"$tmp/bloom_idx"
+    def assertBloomFooters(when: String): Unit = {
+      import scala.jdk.CollectionConverters._
+      val part = new java.io.File(dir).listFiles()
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).head
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.getAbsolutePath),
+        spark.sessionState.newHadoopConf())
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try {
+        val block = reader.getFooter.getBlocks.asScala.head
+        val nameCol = block.getColumns.asScala.find(_.getPath.toDotString == "name").get
+        assert(nameCol.getBloomFilterOffset >= 0, s"no bloom filter written for 'name' $when")
+        val bloom = reader.getBloomFilterDataReader(block).readBloomFilter(nameCol)
+        assert(bloom != null && bloom.getBitsetSize > 0, s"empty bloom filter $when")
+      } finally reader.close()
+    }
+    VecIndex.build(df, dir, opts = opts)
+    assertBloomFooters("after build")
+    // compaction rewrites every file: the same options must carry the
+    // blooms over, not silently drop them
+    VecIndex.compact(spark, dir, opts)
+    assertBloomFooters("after compact")
+    assert(!new java.io.File(dir + ".compact-old").exists())
+    assert(spark.read.parquet(dir).count() == 2000)
   }
 
   test("bloomMaxBytes clamps the written filter (with_bloom_bits analog)") {
@@ -293,6 +303,29 @@ class VecIndexSpec extends SparkSpec {
     assert(results() == before)
   }
 
+  test("compact: a failed swap rename throws and leaves the index on disk") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.failrename.impl", classOf[FailRenameFs].getName)
+    hconf.setBoolean("fs.failrename.impl.disable.cache", true)
+    val local = s"$tmp/swap_idx"
+    val rows = (0 until 40)
+      .map(i => (i.toLong, (0 until 4).map(d => math.cos(i * 3.0 + d)).toArray))
+      .toDF("vec_id", "embedding")
+    VecIndex.build(rows, local)
+    // first rename (live index aside) fails: the index stays at `path`
+    FailRenameFs.failTo = Some(local + ".compact-old")
+    val e1 = try intercept[java.io.IOException](VecIndex.compact(spark, s"failrename://$local"))
+      finally FailRenameFs.failTo = None
+    assert(e1.getMessage.contains("could not move the live index"), e1.getMessage)
+    assert(spark.read.parquet(local).count() == 40)
+    // second rename (compacted copy in) fails: the old index is kept aside
+    FailRenameFs.failTo = Some(local)
+    val e2 = try intercept[java.io.IOException](VecIndex.compact(spark, s"failrename://$local"))
+      finally FailRenameFs.failTo = None
+    assert(e2.getMessage.contains("previous index is preserved"), e2.getMessage)
+    assert(spark.read.parquet(local + ".compact-old").count() == 40)
+  }
+
   test("z-order clustering: range filters on EITHER dimension prune row groups") {
     import graft.index.{zorder, PruneStats}
     // two independent uniform dims: a plain single-column sort would
@@ -313,4 +346,17 @@ class VecIndexSpec extends SparkSpec {
     assert(rx.rowGroupsPruned > rx.rowGroupsTotal / 2, rx.pretty)
     assert(ry.rowGroupsPruned > ry.rowGroupsTotal / 2, ry.pretty)
   }
+}
+
+/** Local filesystem under the `failrename` scheme whose `rename` returns
+  * false (as a Hadoop filesystem reports a failed rename) when the
+  * destination is [[FailRenameFs.failTo]]. */
+class FailRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failrename:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (FailRenameFs.failTo.contains(dst.toUri.getPath)) false else super.rename(src, dst)
+}
+
+object FailRenameFs {
+  @volatile var failTo: Option[String] = None
 }
